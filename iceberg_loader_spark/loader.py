@@ -38,6 +38,7 @@ from iceberg_loader_spark.sources.normalize import (
 )
 from iceberg_loader_spark.sources.tables import ensure_compat
 from iceberg_loader_spark.tables.catalog import Warehouse
+from iceberg_loader_spark.tables.format import Snapshot
 from iceberg_loader_spark.tables.partitioning import (
     TIME_TRANSFORMS,
     PartitionField,
@@ -209,20 +210,9 @@ class _LoadState:
                 pa.field(self.cfg.load_ts_col, pa.timestamp("us"), nullable=True), col
             )
         self._ensure_table(data)
-        if self.cfg.load_timestamp:
-            # the audit column is force-evolved even when schema evolution
-            # is off (reference core/loader.py:156-160, "step 1.5") —
-            # otherwise cast_to_schema silently drops it on pre-existing
-            # tables created without it
-            from iceberg_loader_spark.types import arrow_to_spark as _a2s
-
-            ts_field = data.schema.field(self.cfg.load_ts_col)
-            self.table.add_columns(
-                [T.StructField(self.cfg.load_ts_col, _a2s(ts_field.type), True)]
-            )
-        if self.cfg.schema_evolution:
-            self._evolve(data)
-        table_schema = self.table.schema()
+        table_schema = T.StructType.fromJson(
+            self._evolve(self.table.snapshot(), data).schema_json
+        )
         arrow_target = pa.schema(
             [
                 pa.field(f.name, spark_to_arrow(f.dataType), nullable=True)
@@ -299,15 +289,23 @@ class _LoadState:
         )
         self.new_table_created = True
 
-    def _evolve(self, data: pa.Table) -> None:
-        table_cols = {f.name for f in self.table.schema().fields}
+    def _evolve(self, snap: Snapshot, data: pa.Table) -> Snapshot:
+        """One schema diff per flush against the flush's base snapshot;
+        returns the snapshot whose schema the flush casts to. The audit
+        column is force-evolved even when schema evolution is off
+        (reference core/loader.py:156-160, "step 1.5") — otherwise
+        cast_to_schema silently drops it on pre-existing tables created
+        without it. It and any new data columns land in ONE commit."""
+        wanted = [self.cfg.load_ts_col] if self.cfg.load_timestamp else []
+        if self.cfg.schema_evolution:
+            wanted += data.column_names
+        table_cols = {f["name"] for f in snap.schema_json["fields"]}
         new = [
-            T.StructField(f.name, arrow_to_spark(f.type), True)
-            for f in data.schema
-            if f.name not in table_cols
+            T.StructField(name, arrow_to_spark(data.schema.field(name).type), True)
+            for name in dict.fromkeys(wanted)
+            if name not in table_cols
         ]
-        if new:
-            self.table.add_columns(new)
+        return self.table.add_columns(new) if new else snap
 
     def _write(self, df: DataFrame):
         spark = self.loader.spark

@@ -403,14 +403,15 @@ class SparkbergWriter(DataSourceArrowWriter):
         if self._branch is not None:
             table = table.branch(self._branch)
         self._root = table.root
-        spec = table.partition_spec()
-        if spec:
+        snap = table.snapshot()
+        if snap.partition_spec:
             raise NotImplementedError(
                 "sparkberg writer supports unpartitioned tables; use "
                 "Table.append for partition-transform writes"
             )
         table_schema = [
-            (f.name, f.dataType) for f in table.schema().fields
+            (f.name, f.dataType)
+            for f in T.StructType.fromJson(snap.schema_json).fields
         ]
         df_schema = [(f.name, f.dataType) for f in schema.fields]
         if df_schema != table_schema:
@@ -419,7 +420,7 @@ class SparkbergWriter(DataSourceArrowWriter):
                 f"schema {table_schema} (a name- or type-mismatched "
                 f"append would poison every later read)"
             )
-        self._codec = table.properties().get(
+        self._codec = snap.properties.get(
             "write.parquet.compression-codec",
             DEFAULT_TABLE_PROPERTIES["write.parquet.compression-codec"],
         )

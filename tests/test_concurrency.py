@@ -317,6 +317,52 @@ def test_incremental_scan_with_audit_column_evolution(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
+# schema evolution vs concurrent add_columns: the evolved schema is built
+# from the commit parent, so a column another writer added survives
+# ---------------------------------------------------------------------------
+
+
+def _concurrent_add_c(wh):
+    other = wh.load_table("db.t")
+    return lambda: other.add_columns([T.StructField("c", T.StringType())])
+
+
+def test_drop_columns_keeps_concurrently_added_column(tmp_path):
+    wh = Warehouse(str(tmp_path))
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("a", T.LongType()),
+            T.StructField("b", T.StringType()),
+        ]
+    )
+    t = Table.create(wh, "db.t", schema)
+    _inject_before_commit(t, _concurrent_add_c(wh))
+    t.drop_columns(["b"])
+    final = wh.load_table("db.t").schema()
+    assert [f.name for f in final.fields] == ["id", "a", "c"]
+
+
+def test_promote_column_type_keeps_concurrently_added_column(tmp_path):
+    wh = Warehouse(str(tmp_path))
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("a", T.IntegerType()),
+        ]
+    )
+    t = Table.create(wh, "db.t", schema)
+    _inject_before_commit(t, _concurrent_add_c(wh))
+    t.promote_column_type("a", T.LongType())
+    final = wh.load_table("db.t").schema()
+    assert [(f.name, f.dataType) for f in final.fields] == [
+        ("id", T.LongType()),
+        ("a", T.LongType()),
+        ("c", T.StringType()),
+    ]
+
+
+# ---------------------------------------------------------------------------
 # merge-on-read delete vs concurrent append
 # ---------------------------------------------------------------------------
 

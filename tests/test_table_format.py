@@ -692,9 +692,11 @@ def test_delta_manifests_delete_and_merge_chain(spark, tmp_path):
 
 
 def test_manifest_collection_distributed_matches_driver(spark, tmp_path, monkeypatch):
-    """Executor-side manifest stats (SPARK_GRAFT_MANIFEST=distributed)
-    must produce byte-identical entries, in the same order, as the
-    driver-side footer loop — the commit metadata is mode-independent."""
+    """Executor-side manifest stats (forced by dropping
+    _MANIFEST_DISTRIBUTE_MIN to 1) must produce byte-identical entries,
+    in the same order, as the driver-side footer loop (forced by raising
+    it past the file count) — commit metadata does not depend on where
+    the footers were read."""
     from iceberg_loader_spark.tables import table as table_mod
 
     wh = Warehouse(str(tmp_path))
@@ -713,7 +715,7 @@ def test_manifest_collection_distributed_matches_driver(spark, tmp_path, monkeyp
         [(i, f"g{i % 5}") for i in range(200)], schema=schema
     )
 
-    monkeypatch.setattr(table_mod, "_MANIFEST_MODE", "distributed")
+    monkeypatch.setattr(table_mod, "_MANIFEST_DISTRIBUTE_MIN", 1)
     snap = t.append(df)
     assert sum(e.rows for e in snap.files) == 200
     # partition values survived the executor round-trip
@@ -725,7 +727,7 @@ def test_manifest_collection_distributed_matches_driver(spark, tmp_path, monkeyp
     staging_rel = "/".join(snap.files[0].path.split("/")[:2])  # data/<uuid>
     staging_abs = os.path.join(t.root, staging_rel)
     dist = t._collect_entries(staging_abs, staging_rel, spark=spark)
-    monkeypatch.setattr(table_mod, "_MANIFEST_MODE", "driver")
+    monkeypatch.setattr(table_mod, "_MANIFEST_DISTRIBUTE_MIN", 10**9)
     drv = t._collect_entries(staging_abs, staging_rel, spark=spark)
     assert [e.to_json() for e in dist] == [e.to_json() for e in drv]
     assert len(drv) == len(snap.files)
@@ -760,3 +762,94 @@ def test_partitions_metadata_table(spark, tmp_path):
     u.append(spark.createDataFrame([(1, "x")], schema=schema))
     urows = wh.load_table("db.unpart").partitions_df(spark).collect()
     assert len(urows) == 1 and urows[0].partition_json == "{}"
+
+
+def _count_load_snapshot(monkeypatch) -> list:
+    from iceberg_loader_spark.tables.format import TableMetadata
+
+    calls: list = []
+    orig = TableMetadata.load_snapshot
+
+    def counting(self, version=None):
+        calls.append(version)
+        return orig(self, version)
+
+    monkeypatch.setattr(TableMetadata, "load_snapshot", counting)
+    return calls
+
+
+def test_one_base_snapshot_per_operation(spark, tmp_path, monkeypatch):
+    """An operation resolves its base snapshot once and derives schema,
+    spec and write properties from it; the commit loop loads one parent
+    per attempt. Separate operations still see each other's commits."""
+    wh = Warehouse(str(tmp_path))
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
+    )
+    t = Table.create(
+        wh,
+        "db.loads",
+        schema,
+        properties={"write.sort-order": "id", "write.bloom.keys": "id"},
+    )
+    calls = _count_load_snapshot(monkeypatch)
+
+    t.append(spark.createDataFrame([(i, "a") for i in range(10)], schema))
+    assert len(calls) <= 2, calls
+    calls.clear()
+    t.merge(spark, spark.createDataFrame([(1, "b"), (20, "c")], schema), ["id"])
+    assert len(calls) <= 2, calls
+    calls.clear()
+    t.delete_where(spark, "id = 3")
+    assert len(calls) <= 2, calls
+    assert sorted((r.id, r.v) for r in t.scan(spark).collect()) == sorted(
+        [(i, "a") for i in range(10) if i not in (1, 3)] + [(1, "b"), (20, "c")]
+    )
+
+    # one loader flush with the audit column and one new evolved column
+    loader = SparkLoader(spark, wh)
+    cfg = LoaderConfig(load_timestamp=True, schema_evolution=True)
+    loader.load_data([{"id": 1, "v": "x"}], "db.flush", cfg)
+    calls.clear()
+    loader.load_data([{"id": 2, "v": "y", "extra": 5}], "db.flush", cfg)
+    assert len(calls) <= 4, calls
+    f = wh.load_table("db.flush")
+    assert [c.name for c in f.schema().fields] == ["id", "v", "_load_dttm", "extra"]
+    assert sorted(r.id for r in f.scan(spark).collect()) == [1, 2]
+
+
+def test_commit_retry_budget_comes_from_parent(tmp_path, monkeypatch):
+    """commit.retry.num-retries is read from each attempt's parent: a
+    table allowing 2 retries makes 3 attempts, then surfaces the
+    CommitConflict."""
+    wh = Warehouse(str(tmp_path))
+    t = Table.create(
+        wh, "db.r", _schema(), properties={"commit.retry.num-retries": "2"}
+    )
+    attempts = []
+
+    def always_conflict(snapshot, expected_parent):
+        attempts.append(expected_parent)
+        raise CommitConflict("another writer won")
+
+    monkeypatch.setattr(t.meta, "commit", always_conflict)
+    with pytest.raises(CommitConflict):
+        t.add_columns([T.StructField("c", T.StringType())])
+    assert attempts == [1, 1, 1]
+
+
+def test_drop_columns_with_pending_position_deletes(spark, tmp_path):
+    """Positional delete files carry no equality columns: a pending one
+    neither blocks a drop nor breaks the load-bearing-column check."""
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
+    )
+    t = Table.create(Warehouse(str(tmp_path)), "db.p", schema)
+    t.append(spark.createDataFrame([(i, str(i)) for i in range(10)], schema))
+    t.delete_where(spark, "id = 4", mode="mor-pos")
+    assert t.snapshot().delete_files
+    t.drop_columns(["v"])
+    assert t.scan(spark).columns == ["id"]
+    assert sorted(r.id for r in t.scan(spark).collect()) == [
+        i for i in range(10) if i != 4
+    ]
